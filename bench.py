@@ -261,23 +261,18 @@ def _run_dqa(spark, triples_path: str, report_path: str) -> None:
         report_path)
 
 
-def _construction_run(cores: int | str, corpus_dir: str, cfg: GenConfig,
-                      with_dqa: bool = False,
-                      extra_conf: dict | None = None,
-                      shuffle_partitions: int | None = None) -> tuple[float, int]:
+def _construction_run(cores: int, corpus_dir: str, cfg: GenConfig,
+                      with_dqa: bool = False) -> tuple[float, int]:
     """Construction job (read corpus → extract → link → CC → materialize)
-    at the given parallelism (int → local[n]; string → full master, e.g.
-    a local-cluster spec); with_dqa=True appends the full DQA half
-    (profile → compiled constraints → scoring → report write), i.e. the
+    at local[cores]; with_dqa=True appends the full DQA half (profile →
+    compiled constraints → scoring → report write), i.e. the
     BASELINE.json end-to-end job. Fresh session per run."""
     from pyspark.sql import SparkSession
 
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
-    spark = get_spark(f"bench-construct-{cores}", cores=cores,
-                      extra_conf=extra_conf,
-                      shuffle_partitions=shuffle_partitions)
+    spark = get_spark(f"bench-construct-{cores}", cores=cores)
     docs = spark.read.parquet(os.path.join(corpus_dir, "documents.parquet"))
     dictionary = entity_dictionary(spark, cfg)
     wd = tempfile.mkdtemp(prefix="bench_kg_")
@@ -303,131 +298,19 @@ def _construction_run(cores: int | str, corpus_dir: str, cfg: GenConfig,
     return dt, n_triples
 
 
-def _construction_child() -> None:
-    """Entry point for ONE isolated scaling run (spawned by
-    _isolated_construction_run): its own python process means its own
-    driver JVM, so heap/GC/JIT state is never shared across configs.
-    argv: --_construction-child <spec> <corpus_dir> <n_docs> <out_json>
-    where <spec> is either an int ("8" → local[8], thread-parallelism
-    proxy) or "lc:<n_executors>:<cores_each>:<mem_mb>" → a
-    local-cluster master with that many REAL executor JVMs."""
-    spec = sys.argv[2]
-    corpus_dir = sys.argv[3]
-    n_docs = int(sys.argv[4])
-    out_path = sys.argv[5]
-    # same derivation as _materialize_corpus, so the dictionary matches
+def _scaling_sample(level: str, corpus_dir: str, n_docs: int) -> dict:
+    """One end-to-end run at `level` ∈ {lo, hi}: local[2] vs local[8]
+    task threads, both configs sequentially in THIS python process/JVM
+    (24g heap, JIT-warm for both) — the same-job, two-parallelism-levels,
+    same-input comparison; measures how the engine's plans scale with
+    cores. The equal heap is not symmetric in memory: it gives the
+    8-thread config ¼ of the per-task execution memory, which biases
+    efficiency down through link-stage spill (0.656 at 16M docs,
+    bench_logs/scaling16m_r5.json)."""
+    cores = {"lo": 2, "hi": 8}[level]
     cfg = GenConfig(n_docs=n_docs, n_entities=max(100, n_docs // 20))
-    if spec.startswith("lc:"):
-        n_exec, cores_each, mem_mb = map(int, spec.split(":")[1:])
-        master = f"local-cluster[{n_exec},{cores_each},{mem_mb}]"
-        total = n_exec * cores_each
-        # identical per-executor JVMs in every config — the ratio between
-        # cluster sizes is then apples-to-apples; only the driver heap is
-        # config-independent (the driver node is the same machine however
-        # many executors attach to it)
-        dt, n = _construction_run(
-            master, corpus_dir, cfg, with_dqa=True,
-            shuffle_partitions=4 * total)
-    else:
-        cores = int(spec)
-        # ActiveProcessorCount makes the JVM size GC/JIT/netty pools to
-        # the simulated core count (a real N-core executor's JVM sees N
-        # procs, not the whole host) — honored at JVM launch like driver
-        # memory.
-        dt, n = _construction_run(
-            cores, corpus_dir, cfg, with_dqa=True,
-            extra_conf={"spark.driver.extraJavaOptions":
-                        f"-XX:ActiveProcessorCount={cores}"})
-    with open(out_path, "w") as f:
-        json.dump({"sec": dt, "n_triples": n,
-                   "phases": _construction_run.last_phases}, f)
-
-
-def _isolated_construction_run(spec: int | str, corpus_dir: str,
-                               n_docs: int) -> dict:
-    """Run the end-to-end job in a fresh subprocess at the parallelism
-    described by `spec`.
-
-    spec = "lc:<n_executors>:<cores_each>:<mem_mb>" — a local-cluster
-    master spawns that many REAL executor JVMs, each with its own heap,
-    GC, shuffle server, and python UDF workers, talking to one driver
-    over loopback netty. Per-executor resources are IDENTICAL across
-    cluster sizes by construction, so the N vs 4N ratio measures
-    genuine cluster losses (driver serialization, barriers, stragglers,
-    shuffle) — not JVM-sizing artifacts.
-
-    spec = int n — the local[n] thread proxy in a child process (heap
-    4g+4g/core, JVM pools sized via ActiveProcessorCount). Note its
-    measured asymmetries before trusting ratios across specs: the
-    process tree floats over all host CPUs and the overshoot differs by
-    config (local[2] burns ~2.6 cores — JVM helpers + out-of-band
-    python workers — vs ~8.8 for local[8]: bench_r5_scaling12), and
-    taskset-pinning would serialize the JVM↔python Arrow pipeline that
-    a real executor overlaps (pinned extract burned 3.4× the
-    CPU-seconds at 8 cores vs 2: pinned_probe_r5).
-
-    See _scaling_sample for which proxy each scaling method uses.
-
-    JVM startup is outside the timed window (the child times the job
-    only)."""
-    import subprocess
-
-    fd, out_path = tempfile.mkstemp(suffix=".json", prefix="bench_iso_")
-    os.close(fd)
-    if isinstance(spec, int):
-        env = dict(os.environ, SPARK_DRIVER_MEM=f"{4 + 4 * spec}g")
-    else:
-        # the driver node is the same machine whatever the cluster size
-        env = dict(os.environ, SPARK_DRIVER_MEM="8g")
-    cmd = [sys.executable, os.path.abspath(__file__),
-           "--_construction-child", str(spec), corpus_dir,
-           str(n_docs), out_path]
-    try:
-        subprocess.run(cmd, check=True, env=env)
-        with open(out_path) as f:
-            return json.load(f)
-    finally:
-        os.unlink(out_path)
-
-
-def _scaling_sample(method: str, level: str, corpus_dir: str,
-                    n_docs: int) -> dict:
-    """One end-to-end run at `level` ∈ {lo, hi} under the chosen
-    measurement method (SPARK_GRAFT_SCALING_METHOD):
-
-    - "shared" (default; the prescribed sandbox proxy): local[2] vs
-      local[8] task threads, both configs sequentially in THIS python
-      process/JVM (24g heap, JIT-warm for both) — the same-job,
-      two-parallelism-levels, same-input comparison. Symmetric by
-      construction; measures how the engine's plans scale with cores.
-    - "isolated": per-config child JVMs, heap 4g+4g/core,
-      ActiveProcessorCount=cores. Stricter isolation but asymmetric in
-      practice: each fresh JVM re-pays JIT warmup (a larger fraction of
-      the shorter hi run) and the small config free-rides host CPUs
-      (python UDF workers run beside the 2 task threads: ~2.6 busy
-      cores measured for local[2] vs ~8.8 for local[8]), so it
-      understates efficiency (0.70 vs shared 0.85, bench_r5_scaling12).
-    - "lc": REAL multi-executor clusters — local-cluster with 2 vs 8
-      single-core 6g executor JVMs. The most faithful rendering of
-      "N and 4N executors", but per-job latency (executor round trips,
-      torrent broadcasts, netty shuffle) adds a fixed floor per stage
-      that only amortizes at corpus sizes beyond this sandbox's quiet
-      windows (at 1M docs the link stage reads ~58s at BOTH sizes).
-      Kept for methodology comparison at small scale.
-    """
-    if method == "shared":
-        cores = {"lo": 2, "hi": 8}[level]
-        cfg = GenConfig(n_docs=n_docs, n_entities=max(100, n_docs // 20))
-        dt, n = _construction_run(cores, corpus_dir, cfg, with_dqa=True)
-        return {"sec": dt, "n_triples": n,
-                "phases": _construction_run.last_phases}
-    if method == "isolated":
-        return _isolated_construction_run({"lo": 2, "hi": 8}[level],
-                                          corpus_dir, n_docs)
-    if method == "lc":
-        spec = {"lo": "lc:2:1:6144", "hi": "lc:8:1:6144"}[level]
-        return _isolated_construction_run(spec, corpus_dir, n_docs)
-    raise ValueError(f"unknown scaling method {method!r}")
+    dt, n = _construction_run(cores, corpus_dir, cfg, with_dqa=True)
+    return {"sec": dt, "n_triples": n, "phases": _construction_run.last_phases}
 
 
 def _ann_recall(n_vecs: int = 100_000, dim: int = 64,
@@ -1052,23 +935,20 @@ def main() -> None:
         # the 100 TB design goal (you add executors BECAUSE data grew;
         # the job count stays constant while per-stage data scales, so
         # the fixed driver/job overhead that bounds strong scaling on a
-        # FIXED input amortizes away). Same isolated per-config JVMs
-        # with cluster-proportional resources as --scaling.
-        method = os.environ.get("SPARK_GRAFT_SCALING_METHOD", "shared")
+        # FIXED input amortizes away). Same per-config runs as --scaling.
         n_lo = int(os.environ.get("SPARK_GRAFT_WEAK_DOCS_LO", 2_000_000))
         n_hi = n_lo * 4  # 4x docs for 4x parallelism
         lo_dir, _ = _materialize_corpus(n_lo)
         hi_dir, _ = _materialize_corpus(n_hi)
-        w_hi1 = _scaling_sample(method, "hi", hi_dir, n_hi)
-        w_lo1 = _scaling_sample(method, "lo", lo_dir, n_lo)
-        w_hi2 = _scaling_sample(method, "hi", hi_dir, n_hi)
-        w_lo2 = _scaling_sample(method, "lo", lo_dir, n_lo)
+        w_hi1 = _scaling_sample("hi", hi_dir, n_hi)
+        w_lo1 = _scaling_sample("lo", lo_dir, n_lo)
+        w_hi2 = _scaling_sample("hi", hi_dir, n_hi)
+        w_lo2 = _scaling_sample("lo", lo_dir, n_lo)
         t_hi = min(w_hi1["sec"], w_hi2["sec"])
         t_lo = min(w_lo1["sec"], w_lo2["sec"])
         out["weak_scaling"] = {
             "mode": ("weak end-to-end (construct+DQA): 4x docs on 4x "
                      "parallelism, hi/lo interleaved, best per config"),
-            "method": method,
             "lo": {"docs": n_lo,
                    "triples": w_lo1["n_triples"],
                    "sec_runs": [round(w_lo1["sec"], 2),
@@ -1094,25 +974,20 @@ def main() -> None:
         # N→4N scaling evidence (BASELINE.json north_rule), sandbox
         # proxy: the SAME end-to-end job (construct + full DQA +
         # report) on the SAME input at two parallelism levels,
-        # efficiency = (t_lo / t_hi) / 4. The default method ("shared")
-        # is the prescribed proxy — local[2] vs local[8] task threads,
-        # sequential in one JIT-warm JVM; 2 vs 8 rather than 8 vs 32
-        # because this host is shared (external tenants push loadavg to
-        # 10-18, so wider configs measure the neighbors, not the
-        # engine). SPARK_GRAFT_SCALING_METHOD selects the stricter
-        # per-config-isolated-JVM variant or the real-multi-executor
-        # local-cluster variant; all three are documented with their
-        # measured trade-offs in _scaling_sample. The corpus is 8M docs
+        # efficiency = (t_lo / t_hi) / 4, local[2] vs local[8] task
+        # threads sequential in one JIT-warm JVM (_scaling_sample); 2 vs 8
+        # rather than 8 vs 32 because this host is shared (external
+        # tenants push loadavg to 10-18, so wider configs measure the
+        # neighbors, not the engine). The corpus is 8M docs
         # (~29M triples) so compute dominates fixed per-stage overhead;
         # hi/lo/hi/lo interleave, best per config, so host-noise spikes
         # can't bias the efficiency either way. Takes ~45 min.
-        method = os.environ.get("SPARK_GRAFT_SCALING_METHOD", "shared")
         n_sc = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", 8_000_000))
         sc_dir, sc_cfg = _materialize_corpus(n_sc)
-        hi1 = _scaling_sample(method, "hi", sc_dir, n_sc)
-        lo1 = _scaling_sample(method, "lo", sc_dir, n_sc)
-        hi2 = _scaling_sample(method, "hi", sc_dir, n_sc)
-        lo2 = _scaling_sample(method, "lo", sc_dir, n_sc)
+        hi1 = _scaling_sample("hi", sc_dir, n_sc)
+        lo1 = _scaling_sample("lo", sc_dir, n_sc)
+        hi2 = _scaling_sample("hi", sc_dir, n_sc)
+        lo2 = _scaling_sample("lo", sc_dir, n_sc)
         sc_n = hi1["n_triples"]
         hi_best = min(hi1["sec"], hi2["sec"])
         lo_best = min(lo1["sec"], lo2["sec"])
@@ -1120,7 +995,6 @@ def main() -> None:
             "mode": ("strong end-to-end (construct+DQA), same input, "
                      "N vs 4N parallelism, hi/lo interleaved x2, best "
                      "per config"),
-            "method": method,
             "docs": n_sc,
             "sec_lo": round(lo_best, 2),
             "sec_hi": round(hi_best, 2),
@@ -1139,7 +1013,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--_construction-child":
-        _construction_child()
-    else:
-        main()
+    main()

@@ -220,27 +220,67 @@ def cmd_curate(args) -> None:
     print(json.dumps(stats))
 
 
-def cmd_dqa(args) -> None:
+def _dqa_config(args):
+    """The DQA config from the shared dqa/dqa-append property flags."""
     from shacl_dqa_prototype_spark.functions.terms import OWL, RDF, RDFS
-    from shacl_dqa_prototype_spark.plans.constraints import (
-        DQAConfig,
-        compile_data_constraints,
+    from shacl_dqa_prototype_spark.plans.constraints import DQAConfig
+
+    return DQAConfig(
+        type_property=args.type_property or f"{RDF}type",
+        labeling_property=args.labeling_property or f"{RDFS}label",
+        description_property=args.description_property or f"{RDFS}comment",
+        interlinking_property=args.interlinking_property or f"{OWL}sameAs",
+        uris_max_length=(args.uris_max_length
+                         if args.uris_max_length is not None else 80),
+        base_uri=args.base_uri,
     )
-    from shacl_dqa_prototype_spark.plans.dqa import (
-        contextual_config_from_metadata,
-        run_metadata_dqa,
+
+
+def _read_triples(spark, path: str, fmt: str | None = None):
+    """A triple table from a parquet dir (the construct sink) or an RDF
+    file."""
+    if path.endswith(".parquet") or os.path.isdir(path):
+        from shacl_dqa_prototype_spark.sources.sinks import read_triples
+
+        try:
+            return read_triples(spark, path)
+        except Exception:
+            return spark.read.parquet(path)
+    return _read_rdf(spark, path, fmt)[0]
+
+
+def _read_vocabs(spark, args) -> list[list[tuple]]:
+    """Driver-side rows of each --vocab file, in argument order."""
+    fmts = list(getattr(args, "vocab_formats", []) or [])
+    return [_read_rdf(spark, vp, fmts[i] if i < len(fmts) else None,
+                      need_rows=True)[1] or []
+            for i, vp in enumerate(args.vocab)]
+
+
+def _write_reference_csv(report_rows: list, out_dir: str, args, cfg) -> None:
+    """The reference-shaped 15-column rollup CSV (dq_assessment.py:
+    1283-1290), named dq_assessment_<dataset>.csv with the name lowercased
+    and spaces underscored (dq_assessment.py:61-62, 1280)."""
+    from shacl_dqa_prototype_spark.plans.report_csv import (
+        reference_csv_rows,
+        write_reference_csv,
     )
-    from shacl_dqa_prototype_spark.plans.profile import profile_graph
-    from shacl_dqa_prototype_spark.plans.scoring import score_plan
+
+    ds = (args.dataset_name or "").lower().replace(" ", "_")
+    csv_name = f"dq_assessment_{ds}.csv" if ds else "dq_assessment.csv"
+    write_reference_csv(
+        reference_csv_rows(report_rows, uris_max_length=cfg.uris_max_length),
+        os.path.join(out_dir, csv_name))
+
+
+def cmd_dqa(args) -> None:
+    from shacl_dqa_prototype_spark.functions.terms import VOID
+    from shacl_dqa_prototype_spark.plans import dqa
     from shacl_dqa_prototype_spark.plans.vocab import (
         mine_vocab,
         profile_to_vocab_terms,
-        raw_usage_sets,
-        subclass_closure,
-        tbox_merge_rows,
         vocab_profile_json,
     )
-    from shacl_dqa_prototype_spark.schemas import TRIPLES_SCHEMA
     from shacl_dqa_prototype_spark.sources.sinks import (
         write_report_csv,
         write_report_json,
@@ -263,52 +303,21 @@ def cmd_dqa(args) -> None:
     t_start = time.time()
     timings: dict[str, float] = {}
     spark = _spark(args)
-    T_raw = None
-    if args.triples:
-        if args.triples.endswith(".parquet") or os.path.isdir(args.triples):
-            from shacl_dqa_prototype_spark.sources.sinks import read_triples
+    cfg = _dqa_config(args)
+    T_raw = (_read_triples(spark, args.triples,
+                           getattr(args, "triples_format", None))
+             if args.triples else None)
 
-            try:
-                T_raw = read_triples(spark, args.triples)
-            except Exception:
-                T_raw = spark.read.parquet(args.triples)
-        else:
-            T_raw, _ = _read_rdf(spark, args.triples,
-                                 getattr(args, "triples_format", None))
-
-    cfg = DQAConfig(
-        type_property=args.type_property or f"{RDF}type",
-        labeling_property=args.labeling_property or f"{RDFS}label",
-        description_property=args.description_property or f"{RDFS}comment",
-        interlinking_property=args.interlinking_property or f"{OWL}sameAs",
-        uris_max_length=(args.uris_max_length
-                         if args.uris_max_length is not None else 80),
-        base_uri=args.base_uri,
-    )
-    profile = None
-    if T_raw is not None:
-        profile = profile_graph(
-            T_raw, cfg.type_property, cfg.labeling_property,
-            cfg.description_property, cfg.interlinking_property)
-
-    terms, disjoint = [], []
-    sub_pairs = None
-    T = T_raw
-    used_props = used_classes = None
-    vocab_graphs: list[tuple[str, list[tuple]]] = []
-    vocab_profiles: dict[str, object] = {}
-    if args.vocab:
-        vnames = list(getattr(args, "vocab_names", []) or [])
-        vfmts = list(getattr(args, "vocab_formats", []) or [])
-        vocab_rows = []
-        for i, vp in enumerate(args.vocab):
-            _, rows = _read_rdf(spark, vp, vfmts[i] if i < len(vfmts) else None,
-                                need_rows=True)
-            name = (vnames[i] if i < len(vnames)
-                    else os.path.splitext(os.path.basename(vp))[0])
-            vocab_graphs.append((name, rows or []))
-            vocab_profiles[name] = mine_vocab(rows or [])
-            vocab_rows.extend(rows or [])
+    vnames = list(getattr(args, "vocab_names", []) or [])
+    vocab_graphs = [
+        (vnames[i] if i < len(vnames)
+         else os.path.splitext(os.path.basename(args.vocab[i]))[0], rows)
+        for i, rows in enumerate(_read_vocabs(spark, args))]
+    vocab_profiles = {name: mine_vocab(rows) for name, rows in vocab_graphs}
+    vocab_rows = [r for _name, rows in vocab_graphs for r in rows]
+    terms, disjoint = ([], [])
+    if vocab_graphs:
+        terms, disjoint = profile_to_vocab_terms(mine_vocab(vocab_rows))
         # per-vocabulary profile JSON sink (reference utils.py:643-645,
         # main.py:55-56: profile/vocabularies/<name>.json per vocab)
         vdir = os.path.join(args.output, "profile", "vocabularies")
@@ -317,49 +326,36 @@ def cmd_dqa(args) -> None:
             with open(os.path.join(vdir, f"{name}.json"), "w",
                       encoding="utf-8") as f:
                 json.dump(vocab_profile_json(pv), f, indent=4)
-        prof_v = mine_vocab(vocab_rows)
-        terms, disjoint = profile_to_vocab_terms(prof_v)
-        if T_raw is not None:
-            merged = tbox_merge_rows(vocab_rows, prof_v.classes)
-            T = T_raw.unionByName(
-                spark.createDataFrame(merged, TRIPLES_SCHEMA)).dropDuplicates()
-        sub_pairs = subclass_closure(vocab_rows) or None
-    # usage pruning stays on the RAW graph (reference semantics);
-    # sh:class follows the vocab subClassOf closure
-    if T_raw is not None:
-        used_props, used_classes = raw_usage_sets(T_raw, cfg.type_property)
 
     reports = []
     if args.metadata:
         t0 = time.time()
         metadata, _ = _read_rdf(spark, args.metadata,
                                 getattr(args, "metadata_format", None))
-        cfg = contextual_config_from_metadata(metadata, cfg)
-        reports.append(run_metadata_dqa(
+        # metadata gates the contextual uriRegex/uriSpace data shapes
+        cfg = dqa.contextual_config_from_metadata(metadata, cfg)
+        reports.append(dqa.run_metadata_dqa(
             spark, metadata,
             **({"metadata_class": args.metadata_class}
                if args.metadata_class else {})))
         timings["metadata_shapes_elapsed_time"] = time.time() - t0
 
-    if run_vocab and args.vocab and used_classes is not None:
-        from shacl_dqa_prototype_spark.plans.dqa import run_vocab_dqa
-
+    data = None
+    if T_raw is not None:
+        t0 = time.time()
+        data = dqa.assess_data(T_raw, terms, disjoint, cfg,
+                               vocab_rows=vocab_rows, shapes=run_data)
+        timings["data_shapes_elapsed_time"] = time.time() - t0
+    if run_vocab and data is not None:
         t0 = time.time()
         for name, rows in vocab_graphs:
-            reports.append(run_vocab_dqa(
-                spark, name, rows, used_classes, used_props,
+            reports.append(dqa.run_vocab_dqa(
+                spark, name, rows, data.used_classes, data.used_props,
                 labeling_property=cfg.labeling_property,
-                profile=vocab_profiles.get(name)))
+                profile=vocab_profiles[name]))
         timings["vocab_shapes_elapsed_time"] = time.time() - t0
-
-    plan = None
-    if run_data and T is not None:
-        t0 = time.time()
-        plan = compile_data_constraints(
-            T, terms, disjoint, cfg, used_props=used_props,
-            used_classes=used_classes, subclass_pairs=sub_pairs)
-        plan.violations = plan.violations.cache()
-        reports.append(score_plan(spark, plan, profile, target="data"))
+    if data is not None and data.report is not None:
+        reports.append(data.report)
     if not reports:
         raise SystemExit("nothing to run: every stage was skipped")
 
@@ -372,16 +368,8 @@ def cmd_dqa(args) -> None:
     os.makedirs(args.output, exist_ok=True)
     write_report_csv(report, os.path.join(args.output, "dq_report_csv"))
     write_report_json(report, os.path.join(args.output, "dq_report_json"))
-    # reference-shaped 15-column rollup CSV (dq_assessment.py:1283-1290)
-    from shacl_dqa_prototype_spark.plans.report_csv import (
-        reference_csv_rows,
-        write_reference_csv,
-    )
-
     report_rows = report.collect()
     report.unpersist()  # third and last action on the cached union
-    if plan is not None:
-        timings["data_shapes_elapsed_time"] = time.time() - t0
 
     # A7 — instantiated shapes graphs as Turtle (reference
     # dq_assessment.py:156-159, 212-218, 255-258)
@@ -393,36 +381,30 @@ def cmd_dqa(args) -> None:
 
     shapes_dir = os.path.join(args.output, "shapes")
     os.makedirs(shapes_dir, exist_ok=True)
-    if plan is not None:
+    if data is not None and data.plan is not None:
         with open(os.path.join(shapes_dir, "data_shapes.ttl"), "w") as f:
             f.write(data_shapes_ttl(terms, disjoint, cfg,
-                                    used_props, used_classes))
+                                    data.used_props, data.used_classes))
     if args.metadata:
-        from shacl_dqa_prototype_spark.functions.terms import VOID
-
         with open(os.path.join(shapes_dir, "metadata_shapes.ttl"), "w") as f:
             f.write(metadata_shapes_ttl(
                 args.metadata_class or f"{VOID}Dataset"))
-    if run_vocab and used_classes is not None:
-        for name, rows in vocab_graphs:
+    if run_vocab and data is not None:
+        for name, _rows in vocab_graphs:
             ns = vocab_profiles[name].namespace
             with open(os.path.join(
                     shapes_dir, f"vocabulary_shapes_{name}.ttl"), "w") as f:
                 f.write(vocabulary_shapes_ttl(
                     cfg.labeling_property, cfg.type_property,
-                    sorted(c for c in used_classes if c and c.startswith(ns)),
-                    sorted(p for p in used_props if p.startswith(ns))))
+                    sorted(c for c in data.used_classes
+                           if c and c.startswith(ns)),
+                    sorted(p for p in data.used_props if p.startswith(ns))))
 
-    # reference file naming: dq_assessment_<dataset>.csv with the name
-    # lowercased and spaces underscored (dq_assessment.py:61-62, 1280)
-    ds = (args.dataset_name or "").lower().replace(" ", "_")
-    csv_name = f"dq_assessment_{ds}.csv" if ds else "dq_assessment.csv"
-    write_reference_csv(
-        reference_csv_rows(report_rows, uris_max_length=cfg.uris_max_length),
-        os.path.join(args.output, csv_name))
-    if profile is not None:
+    _write_reference_csv(report_rows, args.output, args, cfg)
+    profile = data.profile.as_dict() if data is not None else {}
+    if data is not None:
         with open(os.path.join(args.output, "profile.json"), "w") as f:
-            json.dump(profile.as_dict(), f, indent=2)
+            json.dump(profile, f, indent=2)
 
     # run_info.json bookkeeping (reference main.py:34-53): per-stage
     # timings + instantiated-shape count + the graph profile, keyed by
@@ -438,16 +420,16 @@ def cmd_dqa(args) -> None:
         "data_shapes_elapsed_time": timings.get("data_shapes_elapsed_time", 0.0),
         "metadata_shapes_elapsed_time": timings.get(
             "metadata_shapes_elapsed_time", 0.0),
-        "num_inst_shapes": len(plan.shapes) if plan is not None else 0,
-        "graph_profile": profile.as_dict() if profile is not None else {},
+        "num_inst_shapes": (len(data.plan.shapes)
+                            if data is not None and data.plan is not None
+                            else 0),
+        "graph_profile": profile,
     }
     with open(run_info_path, "w", encoding="utf-8") as f:
         json.dump(run_info, f, indent=4)
-    if plan is not None:
-        plan.unpersist()  # outputs are materialized; release executor memory
     print(json.dumps({
         "report_rows": len(report_rows), "output": args.output,
-        "profile": profile.as_dict() if profile is not None else {}}))
+        "profile": profile}))
 
 
 def cmd_dqa_append(args) -> None:
@@ -458,8 +440,6 @@ def cmd_dqa_append(args) -> None:
     ALONE (zero historical-triple scans; plans/incremental.py). Repeated
     appends to the same --state keep the report exactly equal to a batch
     `dqa` run over the union of all deltas (asserted in tests)."""
-    from shacl_dqa_prototype_spark.functions.terms import OWL, RDF, RDFS
-    from shacl_dqa_prototype_spark.plans.constraints import DQAConfig
     from shacl_dqa_prototype_spark.plans.incremental import (
         IncrementalDQAState,
         apply_delta,
@@ -472,56 +452,25 @@ def cmd_dqa_append(args) -> None:
     )
 
     spark = _spark(args)
-    if args.delta.endswith(".parquet") or os.path.isdir(args.delta):
-        from shacl_dqa_prototype_spark.sources.sinks import read_triples
-
-        try:
-            delta = read_triples(spark, args.delta)
-        except Exception:
-            delta = spark.read.parquet(args.delta)
-    else:
-        delta, _ = _read_rdf(spark, args.delta, None)
-
+    delta = _read_triples(spark, args.delta)
     terms, disjoint, sub_pairs = [], [], None
     if args.vocab:
-        rows: list[tuple] = []
-        for vp in args.vocab:
-            _, r = _read_rdf(spark, vp, None, need_rows=True)
-            rows.extend(r or [])
-        prof_v = mine_vocab(rows)
-        terms, disjoint = profile_to_vocab_terms(prof_v)
+        rows = [r for vrows in _read_vocabs(spark, args) for r in vrows]
+        terms, disjoint = profile_to_vocab_terms(mine_vocab(rows))
         sub_pairs = subclass_closure(rows) or None
-    cfg = DQAConfig(
-        type_property=args.type_property or f"{RDF}type",
-        labeling_property=args.labeling_property or f"{RDFS}label",
-        description_property=args.description_property or f"{RDFS}comment",
-        interlinking_property=args.interlinking_property or f"{OWL}sameAs",
-        uris_max_length=(args.uris_max_length
-                         if args.uris_max_length is not None else 80),
-        base_uri=args.base_uri,
-    )
+    cfg = _dqa_config(args)
     state = IncrementalDQAState.open(spark, args.state)
     t0 = time.time()
     apply_delta(state, delta, cfg, terms, n_buckets=args.buckets,
                 delta_id=args.delta_id)
     out = {"state": args.state, "apply_sec": round(time.time() - t0, 2)}
     if args.report:
-        from shacl_dqa_prototype_spark.plans.report_csv import (
-            reference_csv_rows,
-            write_reference_csv,
-        )
-
         t0 = time.time()
         rep = score_from_state(state, terms, cfg, disjoint_pairs=disjoint,
                                subclass_pairs=sub_pairs)
         report_rows = rep.collect()
         os.makedirs(args.report, exist_ok=True)
-        ds = (args.dataset_name or "").lower().replace(" ", "_")
-        csv_name = f"dq_assessment_{ds}.csv" if ds else "dq_assessment.csv"
-        write_reference_csv(
-            reference_csv_rows(report_rows,
-                               uris_max_length=cfg.uris_max_length),
-            os.path.join(args.report, csv_name))
+        _write_reference_csv(report_rows, args.report, args, cfg)
         out["report_rows"] = len(report_rows)
         out["report_sec"] = round(time.time() - t0, 2)
         out["report"] = args.report

@@ -9,18 +9,101 @@ uri_regex/uri_space into DQAConfig before data shapes compile.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shacl_dqa_prototype_spark.plans.constraints import (
+    ConstraintPlan,
     DQAConfig,
     VocabTerm,
-    compile_data_constraints,
 )
 from shacl_dqa_prototype_spark.plans.metadata import evaluate_metadata
-from shacl_dqa_prototype_spark.plans.profile import GraphProfile, profile_graph
-from shacl_dqa_prototype_spark.plans.scoring import DIMENSIONS, score_plan
+from shacl_dqa_prototype_spark.plans.profile import GraphProfile
+from shacl_dqa_prototype_spark.plans.scoring import DIMENSIONS
 from shacl_dqa_prototype_spark.functions.terms import VOID
+
+
+@dataclass
+class DataDQA:
+    """One data-stage run: the raw graph's profile and usage sets and,
+    unless the data shapes were skipped, the compiled plan (its shape
+    list) and the scored report."""
+
+    profile: GraphProfile
+    used_props: set[str]
+    used_classes: set[str]
+    plan: ConstraintPlan | None = None
+    report: DataFrame | None = None
+
+
+def assess_data(
+    T: DataFrame,
+    vocab_terms: list[VocabTerm],
+    disjoint_pairs: list[tuple[str, str]],
+    cfg: DQAConfig,
+    profile: GraphProfile | None = None,
+    plan: ConstraintPlan | None = None,
+    vocab_rows: list[tuple] | None = None,
+    shapes: bool = True,
+) -> DataDQA:
+    """The data-stage sequence over the raw triple table T: profile and
+    usage sets of T → (with ``vocab_rows``) TBox merge and subClassOf
+    closure → compile → cache the violations → score.
+
+    The reference profiles and prunes shapes by usage on the RAW graph
+    (dq_assessment.py:128-143) but validates the graph merged with the
+    vocabulary's TBox, and sh:class follows the vocabulary's subClassOf
+    closure; without ``vocab_rows`` T is validated as given.
+
+    Pass ``profile`` and/or ``plan`` (a ConstraintPlan from
+    compile_data_constraints, ideally with .violations already cached) to
+    reuse them — scoring is cheap, the violation scan is not. A plan
+    compiled here is released once scored: scoring materializes the
+    per-shape rows. ``shapes=False`` stops after the usage sets (a run
+    that assesses only the vocabularies)."""
+    # engine entry points are looked up at call time, so a caller that
+    # wraps them (per-layer tracing) sees every call
+    from shacl_dqa_prototype_spark.plans.constraints import compile_data_constraints
+    from shacl_dqa_prototype_spark.plans.profile import profile_graph
+    from shacl_dqa_prototype_spark.plans.scoring import score_plan
+    from shacl_dqa_prototype_spark.plans.vocab import (
+        raw_usage_sets,
+        subclass_closure,
+        tbox_merge_rows,
+    )
+    from shacl_dqa_prototype_spark.schemas import TRIPLES_SCHEMA
+
+    if profile is None:
+        profile = profile_graph(
+            T, cfg.type_property, cfg.labeling_property,
+            cfg.description_property, cfg.interlinking_property,
+        )
+    if plan is not None:
+        used_props, used_classes = plan.used_props, plan.used_classes
+    else:
+        used_props, used_classes = raw_usage_sets(T, cfg.type_property)
+    out = DataDQA(profile, used_props, used_classes, plan)
+    if not shapes:
+        return out
+    if plan is None:
+        subclass_pairs = None
+        if vocab_rows:
+            vocab_classes = [t.term for t in vocab_terms
+                             if t.term_kind == "class" and not t.deprecated]
+            tbox = T.sparkSession.createDataFrame(
+                tbox_merge_rows(vocab_rows, vocab_classes), TRIPLES_SCHEMA)
+            T = T.unionByName(tbox).dropDuplicates()
+            subclass_pairs = subclass_closure(vocab_rows) or None
+        out.plan = compile_data_constraints(
+            T, vocab_terms, disjoint_pairs, cfg, used_props=used_props,
+            used_classes=used_classes, subclass_pairs=subclass_pairs)
+        out.plan.violations = out.plan.violations.cache()
+    out.report = score_plan(T.sparkSession, out.plan, profile, target="data")
+    if plan is None:
+        out.plan.unpersist()
+    return out
 
 
 def run_data_dqa(
@@ -29,23 +112,13 @@ def run_data_dqa(
     disjoint_pairs: list[tuple[str, str]],
     cfg: DQAConfig,
     profile: GraphProfile | None = None,
-    plan=None,
+    plan: ConstraintPlan | None = None,
+    vocab_rows: list[tuple] | None = None,
 ) -> DataFrame:
-    """Full data-shape assessment over the triple table → report DF.
-
-    Pass `plan` (a ConstraintPlan from compile_data_constraints, ideally
-    with .violations already cached) to score an already-compiled plan
-    instead of re-evaluating every constraint — scoring is cheap, the
-    violation scan is not."""
-    if profile is None:
-        profile = profile_graph(
-            T, cfg.type_property, cfg.labeling_property,
-            cfg.description_property, cfg.interlinking_property,
-        )
-    if plan is None:
-        plan = compile_data_constraints(T, vocab_terms, disjoint_pairs, cfg)
-        plan.violations = plan.violations.cache()
-    return score_plan(T.sparkSession, plan, profile, target="data")
+    """Full data-shape assessment over the triple table → report DF (the
+    report of assess_data)."""
+    return assess_data(T, vocab_terms, disjoint_pairs, cfg, profile, plan,
+                       vocab_rows).report
 
 
 def run_metadata_dqa(
@@ -93,8 +166,6 @@ def run_vocab_dqa(
         compile_vocab_constraints,
         score_vocab_plan,
     )
-    from shacl_dqa_prototype_spark.plans.constraints import VocabTerm
-
     rdf_type = f"{RDF}type"
     # reuse the caller's mined profile when available (cmd_dqa mines each
     # vocab once for the profile JSON sink) instead of mining twice

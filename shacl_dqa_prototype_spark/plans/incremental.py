@@ -76,7 +76,9 @@ re-running the same delta (same scheme as the streaming sink's
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,25 +91,29 @@ from pyspark.sql.types import (
 )
 
 from shacl_dqa_prototype_spark.plans.constraints import (
+    SUBJECT_FLAGS,
     DQAConfig,
     VocabTerm,
+    asymmetric_violations,
+    class_domain_violations,
+    class_range_violations,
+    class_usage_violations,
     compile_data_constraints,
+    directed_disjoint_pairs,
+    disjoint_violations,
+    entity_violations,
+    extend_typing,
+    functional_violations,
+    ifp_violations,
+    route_terms,
+    subject_flags,
 )
 from shacl_dqa_prototype_spark.schemas import VIOLATIONS_SCHEMA
 from shacl_dqa_prototype_spark.sources.snapshots import SnapshotTable
-from shacl_dqa_prototype_spark.functions.terms import (
-    EXEMPT_TYPES,
-    OWL_NAMED_INDIVIDUAL,
-    PROLIX_CLASSES,
-    RDFS,
-)
-
-_FLAGS = ["is_entity", "is_exempt", "has_label", "has_ilp", "has_desc",
-          "is_prolix", "lbl_nolang", "dsc_nolang"]
 
 SUBJ_FLAGS_SCHEMA = StructType(
     [StructField("s", StringType(), False)]
-    + [StructField(f, BooleanType(), True) for f in _FLAGS]
+    + [StructField(f, BooleanType(), True) for f in SUBJECT_FLAGS]
 )
 PS_COUNTS_SCHEMA = StructType([
     StructField("p", StringType(), False),
@@ -149,39 +155,8 @@ MONOTONE_METRICS = (
     "MalformedLiteral",
 )
 
-_OWL_THING = "http://www.w3.org/2002/07/owl#Thing"
-
-
-def _dom_class_props(vocab_terms: list[VocabTerm]) -> dict[str, str]:
-    """prop → class domain, for the props whose CorrectDomain branch is the
-    sh:class anti-join (constraints.py dom_class routing; owl:Thing domains
-    are the vacuous nodeKind shape — no violations, no state)."""
-    return {t.term: t.domain for t in vocab_terms
-            if t.term_kind != "class" and t.domain and not t.deprecated
-            and t.domain != _OWL_THING}
-
-
-def _rng_class_props(vocab_terms: list[VocabTerm]) -> dict[str, str]:
-    """prop → class range, for the props whose CorrectRange branch is the
-    sh:class anti-join — same per-term-kind routing as the batch compiler
-    (object_property: Thing/Resource → nodeKind, monotone tier;
-    rdf_property: class-kind range ALWAYS sh:class, reference parity)."""
-    out = {}
-    for t in vocab_terms:
-        if t.term_kind == "class" or not t.range or t.deprecated:
-            continue
-        if (t.term_kind == "object_property"
-                and t.range not in (_OWL_THING, f"{RDFS}Resource")):
-            out[t.term] = t.range
-        elif t.term_kind == "rdf_property" and t.range_kind != "literal":
-            out[t.term] = t.range
-    return out
-
-
-def _asym_props(vocab_terms: list[VocabTerm]) -> list[str]:
-    # batch parity: asymmetric harvesting does NOT exclude deprecated
-    return [t.term for t in vocab_terms
-            if t.term_kind != "class" and t.asymmetric]
+# concurrent table folds per apply_delta (Spark schedules concurrent jobs)
+_FOLD_THREADS = 4
 
 
 @dataclass
@@ -259,20 +234,6 @@ class IncrementalDQAState:
         return deleted
 
 
-def _delta_subj_flags(delta: DataFrame, cfg: DQAConfig) -> DataFrame:
-    p, o = F.col("p"), F.col("o")
-    return delta.groupBy("s").agg(
-        F.max(p == cfg.type_property).alias("is_entity"),
-        F.max((p == cfg.type_property) & o.isin(EXEMPT_TYPES)).alias("is_exempt"),
-        F.max(p == cfg.labeling_property).alias("has_label"),
-        F.max(p == cfg.interlinking_property).alias("has_ilp"),
-        F.max(p == cfg.description_property).alias("has_desc"),
-        F.max((p == cfg.type_property) & o.isin(PROLIX_CLASSES)).alias("is_prolix"),
-        F.max((p == cfg.labeling_property) & F.col("o_lang").isNull()).alias("lbl_nolang"),
-        F.max((p == cfg.description_property) & F.col("o_lang").isNull()).alias("dsc_nolang"),
-    )
-
-
 def delta_monotone_violations(
     delta: DataFrame, vocab_terms: list[VocabTerm], cfg: DQAConfig,
 ) -> DataFrame:
@@ -292,15 +253,9 @@ def delta_monotone_violations(
     The surviving branches are pure per-triple filters against broadcast
     dims, so union-over-deltas == batch-over-union (asserted in
     tests/test_incremental.py)."""
-    safe = []
-    for t in vocab_terms:
-        nonmono_range = t.range is not None and (
-            (t.term_kind == "object_property"
-             and t.range not in (_OWL_THING, f"{RDFS}Resource"))
-            or (t.term_kind == "rdf_property" and t.range_kind != "literal")
-        )
-        safe.append(replace(t, range=None, range_kind=None)
-                    if nonmono_range else t)
+    safe = [replace(t, range=None, range_kind=None)
+            if route_terms([t]).class_range else t
+            for t in vocab_terms]
     plan = compile_data_constraints(
         delta, safe, [], cfg,
         used_props={t.term for t in safe if t.term_kind != "class"},
@@ -334,7 +289,6 @@ def apply_delta(
     vocab_terms: list[VocabTerm],
     n_buckets: int = 32,
     delta_id: str | None = None,
-    parallelism: int = 4,
 ) -> None:
     """Fold one appended triple batch into the DQA state.
 
@@ -347,12 +301,10 @@ def apply_delta(
 
     The seven table folds are mutually INDEPENDENT (disjoint state dirs
     and logs, all reading the one persisted delta), so they are submitted
-    from a thread pool (``parallelism``; Spark schedules concurrent jobs
-    fine) — the per-delta floor is the SLOWEST table's
+    from a thread pool — the per-delta floor is the SLOWEST table's
     bucket-probe + merge-write, not the SUM of seven driver-synchronized
     round trips. The delta is materialized once before forking so
     concurrent jobs never race to compute the same cached partitions.
-    Pass ``parallelism=1`` to fold sequentially.
 
     Pass ``delta_id`` (any stable string — a snapshot id, an epoch) to
     make the apply IDEMPOTENT: every table commit records it, and a retry
@@ -362,6 +314,7 @@ def apply_delta(
     is still atomic and individually keyed. Old snapshots stay readable
     (time travel / rollback); call expire_snapshots to vacuum."""
     extra = {"delta_id": delta_id} if delta_id is not None else None
+    routes = route_terms(vocab_terms)
 
     def _already(table: SnapshotTable) -> bool:
         # per-delta records, plus the applied-id sets a vacuum compaction
@@ -376,13 +329,13 @@ def apply_delta(
         # and downstream per-subject work share the layout
         if _already(state.subj_flags):
             return
-        d_flags = _delta_subj_flags(delta, cfg)
+        d_flags = subject_flags(delta, cfg)
         bs = _changed_buckets(d_flags, "s", n_buckets)
         merged_flags = (
             state.subj_flags.read_buckets(bs)
             .unionByName(d_flags)
             .groupBy("s")
-            .agg(*[F.max(f).alias(f) for f in _FLAGS])
+            .agg(*[F.max(f).alias(f) for f in SUBJECT_FLAGS])
         )
         state.subj_flags.commit_merge_buckets(
             merged_flags, bs, bucket_col="s", n_buckets=n_buckets,
@@ -417,11 +370,10 @@ def apply_delta(
                 extra=extra)
 
     def _fold_po() -> None:
-        ifp = [t.term for t in vocab_terms
-               if t.inverse_functional and not t.deprecated]
         if _already(state.po_pairs):
             return
-        d_po = delta.filter(F.col("p").isin(ifp)).select("p", "o", "s")
+        d_po = (delta.filter(F.col("p").isin(routes.inverse_functional))
+                .select("p", "o", "s"))
         bs = _changed_buckets(d_po, "o", n_buckets)
         if bs:
             merged_po = (
@@ -435,7 +387,7 @@ def apply_delta(
     def _fold_dom() -> None:
         # (p, s) pairs of class-domain props — CorrectDomain anti-joins
         # them against cls_pairs; bucketed by s so that join co-partitions
-        dom_props = sorted(_dom_class_props(vocab_terms))
+        dom_props = sorted({q for q, _ in routes.class_domain})
         if not dom_props or _already(state.dom_pairs):
             return
         d_dom = (delta.filter(F.col("p").isin(dom_props))
@@ -454,8 +406,8 @@ def apply_delta(
         # (p, s, o) pairs of class-range + asymmetric props — range
         # anti-joins on o against cls_pairs (hence bucketed by o);
         # asymmetric self-joins within the (small) per-prop slice
-        spo_props = sorted(set(_rng_class_props(vocab_terms))
-                           | set(_asym_props(vocab_terms)))
+        spo_props = sorted({q for q, _ in routes.class_range}
+                           | set(routes.asymmetric))
         if not spo_props or _already(state.spo_pairs):
             return
         d_spo = (delta.filter(F.col("p").isin(spo_props))
@@ -492,20 +444,14 @@ def apply_delta(
         # materialize the shared input ONCE so concurrent folds read the
         # cache instead of racing to compute the same partitions
         delta.count()
-        if parallelism > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=parallelism) as ex:
-                futures = [ex.submit(f) for f in folds]
-                # surface the FIRST failure but let every fold finish —
-                # partial commits are healed by the delta_id retry path
-                errs = [f.exception() for f in futures]
-            for e in errs:
-                if e is not None:
-                    raise e
-        else:
-            for f in folds:
-                f()
+        with ThreadPoolExecutor(max_workers=_FOLD_THREADS) as ex:
+            futures = [ex.submit(f) for f in folds]
+            # surface the FIRST failure but let every fold finish —
+            # partial commits are healed by the delta_id retry path
+            errs = [f.exception() for f in futures]
+        for e in errs:
+            if e is not None:
+                raise e
     finally:
         delta.unpersist()
 
@@ -544,165 +490,63 @@ def profile_from_state(state: IncrementalDQAState) -> dict[str, DataFrame]:
     }
 
 
+def _usage_from_state(state: IncrementalDQAState) -> tuple[set[str], set[str]]:
+    """The usage-pruning sets (used properties, used classes), read from
+    state — O(#properties)/O(#classes) collects, no triple scan."""
+    used_props = {r["p"] for r in
+                  state.ps_counts.read().select("p").distinct().collect()}
+    used_classes = {r["cls"] for r in
+                    state.cls_pairs.read().select("cls").distinct().collect()}
+    return used_props, used_classes
+
+
 def violations_from_state(
     state: IncrementalDQAState,
     vocab_terms: list[VocabTerm],
     cfg: DQAConfig,
     disjoint_pairs: list[tuple[str, str]] | None = None,
     subclass_pairs: list[tuple[str, str]] | None = None,
+    used_props: set[str] | None = None,
+    used_classes: set[str] | None = None,
 ) -> DataFrame:
     """Violations for ALL constraint families from state + the monotone
     log, same (metric, item, focus, value) shape as
     compile_data_constraints emits (rows per distinct item/focus — see
     module docstring). ``disjoint_pairs``/``subclass_pairs`` mirror the
-    batch compiler's arguments."""
-    flags = state.subj_flags.read()
-    EnX = flags.filter(F.col("is_entity") & ~F.col("is_exempt"))
-    parts = []
+    batch compiler's arguments; the usage sets are read from state unless
+    the caller already has them."""
+    if used_props is None or used_classes is None:
+        used_props, used_classes = _usage_from_state(state)
+    routes = route_terms(vocab_terms, used_props)
+    typing = state.cls_pairs.read().select("s", F.col("cls").alias("o"))
+    typing_ext = extend_typing(typing, subclass_pairs)
 
-    def _v(df, metric, item, focus_col):
-        parts.append(df.select(
-            F.lit(metric).alias("metric"),
-            (F.lit(item) if isinstance(item, str) else
-             (item if item is not None else F.lit(None).cast("string"))).alias("item"),
-            F.col(focus_col).alias("focus"),
-            F.lit(None).cast("string").alias("value")))
-
-    _v(EnX.filter(F.col("s").contains("#") | F.col("s").startswith("_:")),
-       "UsageHashURIsEntities", None, "s")
-    _v(EnX.filter(~F.col("has_label")), "LabelForEntities", None, "s")
-    _v(EnX.filter(~F.col("has_ilp")), "InterlinkingCompleteness", None, "s")
-    _v(EnX.filter((F.length("s") > cfg.uris_max_length)
-                  | F.col("s").startswith("_:")), "URIsLengthEntities", None, "s")
-    _v(EnX.filter(F.col("s").rlike(r"\?.+=.*")), "URIsParametersEntities", None, "s")
-    _v(EnX.filter(F.col("is_prolix")), "ProlixFeatures", None, "s")
-    _v(EnX.filter(F.col("s").startswith("_:")), "SelfDescriptiveFormat", None, "s")
-    _v(EnX.filter(F.col("s").startswith("_:")), "BlankNodesUsageEntities", None, "s")
-    # C4/C5 are entity-scoped URI filters — derivable from subj_flags too
-    if cfg.uri_regex_pattern:
-        _v(EnX.filter(F.col("s").startswith("_:")
-                      | ~F.col("s").rlike("^" + cfg.uri_regex_pattern)),
-           "URIRegexComplianceEntities", None, "s")
-    if cfg.uri_space:
-        _v(EnX.filter(~F.col("s").startswith(cfg.uri_space)),
-           "URISpaceComplianceEntities", None, "s")
-    if cfg.check_languages:
-        _v(flags.filter(~F.col("is_exempt") & F.col("lbl_nolang")),
-           "DifferentLanguagesLabelsEntities", cfg.labeling_property, "s")
-        _v(flags.filter(~F.col("is_exempt") & F.col("dsc_nolang")),
-           "DifferentLanguagesDescriptionsEntities", cfg.description_property, "s")
-
-    fp = sorted(t.term for t in vocab_terms if t.functional and not t.deprecated)
-    if fp:
-        multi = state.ps_counts.read().filter(
-            F.col("p").isin(fp) & (F.col("n") > 1))
-        parts.append(multi.select(
-            F.lit("FunctionalProperty").alias("metric"),
-            F.col("p").alias("item"), F.col("s").alias("focus"),
-            F.lit(None).cast("string").alias("value")))
-
-    ifp = sorted(t.term for t in vocab_terms
-                 if t.inverse_functional and not t.deprecated)
-    if ifp:
-        shared = (
-            state.po_pairs.read().filter(F.col("p").isin(ifp))
-            .groupBy("p", "o").agg(F.countDistinct("s").alias("ns"))
-            .filter(F.col("ns") > 1)
-        )
-        parts.append(shared.select(
-            F.lit("InverseFunctionalPropertyUniqueness").alias("metric"),
-            F.col("p").alias("item"), F.col("o").alias("focus"),
-            F.lit(None).cast("string").alias("value")))
-
-    # ---- retractable anti-join families: state ⋈ state, no triple scan ----
-    spark = flags.sparkSession
-    cls = state.cls_pairs.read()
-    # usage-pruning parity with the batch compiler, read from state
-    # (O(#properties)/O(#classes) collects)
-    used_props = {r["p"] for r in
-                  state.ps_counts.read().select("p").distinct().collect()}
-    used_classes = {r["cls"] for r in cls.select("cls").distinct().collect()}
-    # typing extended through the rdfs:subClassOf closure (broadcast dim)
-    typed = cls.select("s", F.col("cls").alias("o"))
-    if subclass_pairs:
-        closure = spark.createDataFrame(subclass_pairs, ["o", "anc"])
-        typed = typed.unionByName(
-            typed.join(F.broadcast(closure), "o")
-            .select("s", F.col("anc").alias("o"))
-        ).distinct()
-
-    def _v2(df, metric, item_col, focus_col, value_col=None):
-        parts.append(df.select(
-            F.lit(metric).alias("metric"),
-            F.col(item_col).alias("item"),
-            F.col(focus_col).alias("focus"),
-            (F.col(value_col) if value_col
-             else F.lit(None).cast("string")).alias("value")))
-
-    # C26 CorrectDomain(class): dom_pairs without a matching (s, domain)
-    # typing row — both sides bucketed by s
-    dom = {pp: d for pp, d in _dom_class_props(vocab_terms).items()
-           if pp in used_props}
-    if dom:
-        dom_df = spark.createDataFrame(list(dom.items()), ["p", "domain"])
-        subj_prop = state.dom_pairs.read().join(F.broadcast(dom_df), "p")
-        typed_as = typed.withColumnsRenamed({"o": "domain"})
-        _v2(subj_prop.join(typed_as, ["s", "domain"], "left_anti"),
-            "CorrectDomain", "p", "s")
-
-    # C29 CorrectRange(class): spo_pairs whose object lacks the range
-    # typing — spo_pairs bucketed by o to co-partition with cls_pairs(s)
-    rng = {pp: r for pp, r in _rng_class_props(vocab_terms).items()
-           if pp in used_props}
-    if rng:
-        rng_df = spark.createDataFrame(list(rng.items()), ["p", "range"])
-        vals_c = state.spo_pairs.read().join(F.broadcast(rng_df), "p")
-        typed_obj = typed.select(F.col("s").alias("o"),
-                                 F.col("o").alias("range"))
-        _v2(vals_c.join(typed_obj, ["o", "range"], "left_anti"),
-            "CorrectRange", "p", "s", "o")
-
-    # C25 AsymmetricProperty: pair-swap semi self-join within state
-    asym = sorted(set(_asym_props(vocab_terms)) & used_props)
-    if asym:
-        R = state.spo_pairs.read().filter(F.col("p").isin(asym))
-        Rswap = R.select(F.col("p").alias("p2"), F.col("o").alias("s2"),
-                         F.col("s").alias("o2"))
-        mutual = R.join(
-            Rswap,
-            (R.p == Rswap.p2) & (R.s == Rswap.s2) & (R.o == Rswap.o2),
-            "semi")
-        _v2(mutual, "AsymmetricProperty", "p", "s", "o")
-
-    # C16 EntitiesDisjointClasses: directed pairs over the typing state
-    if disjoint_pairs:
-        dpairs = [
-            (a, b) for (a, b) in
-            ({(a, b) for (a, b) in disjoint_pairs}
-             | {(b, a) for (a, b) in disjoint_pairs})
-            if a in used_classes
-        ]
-        if dpairs:
-            pair_df = spark.createDataFrame(dpairs, ["class_a", "class_b"])
-            ta = typed.withColumnsRenamed({"o": "class_a"})
-            tb = typed.withColumnsRenamed({"o": "class_b"})
-            both = (ta.join(tb, "s")
-                    .join(F.broadcast(pair_df), ["class_a", "class_b"], "semi")
-                    .withColumn("pair", F.concat_ws("|", "class_a", "class_b")))
-            _v2(both, "EntitiesDisjointClasses", "pair", "s")
-
-    # C7 SchemaCompletenessClassUsage: vocab classes with no instance that
-    # isn't typed owl:NamedIndividual
+    # per-state-table derivations of the shared family functions; the
+    # anti-joins are state ⋈ state (dom_pairs is bucketed by s and
+    # spo_pairs by o to co-partition with cls_pairs(s))
+    parts = [entity_violations(state.subj_flags.read(), cfg)]
+    if routes.functional:
+        parts.append(functional_violations(state.ps_counts.read(),
+                                           routes.functional))
+    if routes.inverse_functional:
+        parts.append(ifp_violations(state.po_pairs.read(),
+                                    routes.inverse_functional))
+    if routes.class_domain:
+        parts.append(class_domain_violations(
+            state.dom_pairs.read(), typing_ext, routes.class_domain))
+    if routes.class_range:
+        parts.append(class_range_violations(
+            state.spo_pairs.read(), typing_ext, routes.class_range))
+    if routes.asymmetric:
+        parts.append(asymmetric_violations(state.spo_pairs.read(),
+                                           routes.asymmetric))
+    dpairs = directed_disjoint_pairs(disjoint_pairs or [], used_classes)
+    if dpairs:
+        parts.append(disjoint_violations(typing_ext, dpairs))
     vclasses = [t.term for t in vocab_terms
                 if t.term_kind == "class" and not t.deprecated]
     if vclasses:
-        cls_df = spark.createDataFrame([(c,) for c in vclasses], ["cls"])
-        ni = cls.filter(F.col("cls") == OWL_NAMED_INDIVIDUAL) \
-                .select("s").distinct()
-        with_instances = (cls.join(ni, "s", "left_anti")
-                          .select("cls").distinct())
-        missing = cls_df.join(F.broadcast(with_instances), "cls", "left_anti")
-        _v2(missing, "SchemaCompletenessClassUsage", "cls", "cls")
+        parts.append(class_usage_violations(typing, vclasses))
 
     # monotone families come straight off the append-only log. Per-triple
     # rows are naturally disjoint across deltas; MisplacedProperties emits
@@ -711,9 +555,6 @@ def violations_from_state(
     mono = state.mono_violations.read()
     parts.append(mono.filter(F.col("metric") != "MisplacedProperties"))
     parts.append(mono.filter(F.col("metric") == "MisplacedProperties").distinct())
-
-    from functools import reduce
-
     return reduce(DataFrame.unionByName, parts)
 
 
@@ -737,11 +578,8 @@ def score_from_state(
     from shacl_dqa_prototype_spark.plans.scoring import score_plan
     from shacl_dqa_prototype_spark.schemas import TRIPLES_SCHEMA
 
-    ps = state.ps_counts.read()
-    spark = ps.sparkSession
-    used_props = {r["p"] for r in ps.select("p").distinct().collect()}
-    used_classes = {r["cls"] for r in
-                    state.cls_pairs.read().select("cls").distinct().collect()}
+    spark = state.ps_counts.read().sparkSession
+    used_props, used_classes = _usage_from_state(state)
     shapes_plan = compile_data_constraints(
         spark.createDataFrame([], TRIPLES_SCHEMA), vocab_terms,
         disjoint_pairs or [], cfg,
@@ -768,6 +606,7 @@ def score_from_state(
     )
     violations = violations_from_state(
         state, vocab_terms, cfg,
-        disjoint_pairs=disjoint_pairs, subclass_pairs=subclass_pairs)
+        disjoint_pairs=disjoint_pairs, subclass_pairs=subclass_pairs,
+        used_props=used_props, used_classes=used_classes)
     plan = ConstraintPlan(violations=violations, shapes=shapes)
     return score_plan(spark, plan, profile, target="data")

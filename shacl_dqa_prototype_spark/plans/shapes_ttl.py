@@ -16,11 +16,13 @@ shape multisets with indices normalized.
 
 from __future__ import annotations
 
-from shacl_dqa_prototype_spark.functions.terms import RDFS
-
-from .constraints import DQAConfig, VocabTerm
-
-OWL_THING = "http://www.w3.org/2002/07/owl#Thing"
+from .constraints import (
+    URI_PARAMS_PATTERN,
+    DQAConfig,
+    VocabTerm,
+    directed_disjoint_pairs,
+    route_terms,
+)
 
 PREFIXES = """\
 @prefix ex: <https://www.example.org/> .
@@ -133,7 +135,7 @@ def data_shapes_ttl(
         f'length of less than {cfg.uris_max_length}";\n'))
     out.append(_or_shape(
         "URIsParametersEntitiesShape", tp,
-        '            sh:not[ sh:pattern "\\\\?.+=.*" ; ] ;\n'
+        f'            sh:not[ sh:pattern "{_ttl_escape(URI_PARAMS_PATTERN)}" ; ] ;\n'
         '            sh:message "URIsParametersEntities - URIs shouldn\'t '
         'use parameters";\n'))
     out.append(_or_shape(
@@ -214,12 +216,7 @@ def data_shapes_ttl(
             "            sh:maxCount 0;\n"
             '            sh:message "MisplacedClasses_{i} - The class '
             f'{c.term} is being used as a property" ;\n'))
-    dpairs = sorted(
-        (a, b) for (a, b) in
-        ({(a, b) for (a, b) in disjoint_pairs}
-         | {(b, a) for (a, b) in disjoint_pairs})
-        if a in used_classes)
-    for a, b in dpairs:
+    for a, b in sorted(directed_disjoint_pairs(disjoint_pairs, used_classes)):
         class_shape(
             "ex:EntitiesDisjointClassesShape_{i}\n    a sh:NodeShape ;\n"
             f"    sh:targetClass <{a}> ;\n    sh:not [\n"
@@ -237,7 +234,7 @@ def data_shapes_ttl(
             f'{t.term} is being used as a class" ;\n    ].\n\n')
 
     def domain_shape(t: VocabTerm) -> None:
-        if t.domain != OWL_THING:
+        if route_terms([t]).class_domain:
             prop_shape(
                 "ex:CorrectDomainShape_{i}\n    a sh:NodeShape ;\n"
                 f"    sh:targetSubjectsOf <{t.term}> ;\n"
@@ -262,13 +259,10 @@ def data_shapes_ttl(
                   '%s is used with an incorrect range"')
 
     def range_shapes(t: VocabTerm) -> None:
-        """Range routing, mirroring constraints.py:429-497 (which itself
-        mirrors builder:330-362 and the rdf_property branch 433-455
-        including its always-sh:class quirk for class-kind ranges)."""
+        """One range shape per the compiler's routing (route_terms)."""
         msg = _range_msg % t.term
-        if t.term_kind == "datatype_property" or (
-                t.term_kind == "rdf_property" and t.range_kind == "literal"
-                and t.range != f"{RDFS}Literal"):
+        routes = route_terms([t])
+        if routes.datatype_range:
             range_prop_shape(t, msg + f" ;\n        sh:datatype <{t.range}>\n")
             prop_shape(
                 "ex:MalformedLiteralShape_{i}\n    a sh:NodeShape ;\n"
@@ -278,12 +272,14 @@ def data_shapes_ttl(
                 '        sh:message "MalformedLiteral_{i} - The property '
                 f'{t.term} is used with an incompatible datatype or an '
                 'il-typed literal" ;\n    ].\n\n')
-        elif t.term_kind == "rdf_property" and t.range_kind == "literal":
+        elif routes.literal_kind:
             range_prop_shape(t, "        sh:nodeKind sh:Literal ;\n" + msg + "\n")
-        elif t.term_kind == "object_property" and t.range == OWL_THING:
+        elif routes.iri_kind:
             range_prop_shape(
                 t, "        sh:nodeKind sh:BlankNodeOrIRI ;\n" + msg + "\n")
-        elif t.term_kind == "object_property" and t.range == f"{RDFS}Resource":
+        elif routes.class_range:
+            range_prop_shape(t, msg + f" ;\n        sh:class <{t.range}> \n")
+        else:  # object property ranged rdfs:Resource: either node kind
             range_prop_shape(
                 t,
                 "        sh:or (\n            [\n"
@@ -291,8 +287,6 @@ def data_shapes_ttl(
                 + msg + "]\n            [\n"
                 "                sh:nodeKind sh:Literal ;\n        "
                 + msg + "\n            ]\n        );\n")
-        else:
-            range_prop_shape(t, msg + f" ;\n        sh:class <{t.range}> \n")
 
     for t in props:
         if t.term not in used_props:

@@ -421,6 +421,118 @@ def test_cmd_dqa_metadata_only(spark, tmp_path):
     assert not (tmp_path / "md_out" / "shapes" / "data_shapes.ttl").exists()
 
 
+# Self-contained dqa inputs (Turtle data, RDF/XML vocabulary, Turtle
+# VoID): the cmd_dqa surface checked without the reference datasets.
+_LOCAL_DATA_TTL = """@prefix ex: <http://example.org/pz#> .
+@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .
+ex:margherita a ex:Pizza ; rdfs:label "Margherita"@en ;
+    ex:hasTopping ex:tomato , ex:basil .
+ex:funghi a ex:Pizza ; ex:hasTopping ex:mushroom .
+ex:tomato a ex:Topping ; rdfs:label "Tomato" .
+ex:basil a ex:Topping .
+ex:mushroom ex:hasTopping ex:tomato .
+"""
+_LOCAL_VOCAB_XML = """<?xml version="1.0"?>
+<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+         xmlns:rdfs="http://www.w3.org/2000/01/rdf-schema#"
+         xmlns:owl="http://www.w3.org/2002/07/owl#"
+         xml:base="http://example.org/pz">
+  <owl:Ontology rdf:about="http://example.org/pz"/>
+  <owl:Class rdf:about="#Pizza"><rdfs:label>Pizza</rdfs:label></owl:Class>
+  <owl:Class rdf:about="#Topping">
+    <owl:disjointWith rdf:resource="#Pizza"/>
+  </owl:Class>
+  <owl:Class rdf:about="#Margherita">
+    <rdfs:subClassOf rdf:resource="#Pizza"/>
+  </owl:Class>
+  <owl:ObjectProperty rdf:about="#hasTopping">
+    <rdfs:domain rdf:resource="#Pizza"/>
+    <rdfs:range rdf:resource="#Topping"/>
+  </owl:ObjectProperty>
+</rdf:RDF>
+"""
+_LOCAL_VOID_TTL = """@prefix void: <http://rdfs.org/ns/void#> .
+@prefix dct: <http://purl.org/dc/terms/> .
+<http://example.org/pz-dataset> a void:Dataset ;
+    dct:title "Local pizzas" ;
+    dct:license <http://creativecommons.org/licenses/by/4.0/> ;
+    void:dataDump <http://example.org/pz.ttl> ;
+    void:uriSpace "http://example.org/pz#" ;
+    void:uriRegexPattern "http://example\\.org/pz#[a-z]+" .
+"""
+
+
+def _local_dqa_args(tmp_path, out: str, with_graphs: bool = True):
+    import argparse
+
+    for name, text in (("data.ttl", _LOCAL_DATA_TTL),
+                       ("vocab.xml", _LOCAL_VOCAB_XML),
+                       ("void.ttl", _LOCAL_VOID_TTL)):
+        (tmp_path / name).write_text(text, encoding="utf-8")
+    return argparse.Namespace(
+        cmd="dqa", config=None,
+        triples=str(tmp_path / "data.ttl") if with_graphs else None,
+        triples_format=None,
+        vocab=[str(tmp_path / "vocab.xml")] if with_graphs else [],
+        vocab_names=["pz"] if with_graphs else [], vocab_formats=[],
+        metadata=str(tmp_path / "void.ttl"), metadata_format=None,
+        metadata_class=None, output=str(tmp_path / out),
+        dataset_name="local pz", base_uri="http://example.org/pz#",
+        type_property=None, labeling_property=None,
+        description_property=None, interlinking_property=None,
+        uris_max_length=None, master=None, shuffle_partitions=None,
+    )
+
+
+def test_cmd_dqa_local_inputs_release_all_caches(spark, tmp_path):
+    """test_cmd_dqa_releases_all_caches on generated inputs: a full
+    data + vocabulary + metadata run adds no persistent RDDs to the
+    session and writes every sink."""
+    import csv
+
+    from main import cmd_dqa
+
+    args = _local_dqa_args(tmp_path, "out")
+    before = set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
+    cmd_dqa(args)
+    after = set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
+    assert after - before == set(), f"cmd_dqa leaked RDDs {after - before}"
+
+    out = tmp_path / "out"
+    with open(out / "dq_assessment_local_pz.csv") as f:
+        names = {r["shape_name"] for r in csv.DictReader(f)}
+    # one row family from each stage: metadata, data (incl. the VoID-gated
+    # uriSpace shape) and vocabulary
+    assert any("Availability" in n for n in names), names
+    assert any("URISpaceCompliance" in n for n in names), names
+    assert any("CorrectDomain" in n for n in names), names
+    assert any("LabelForClasses" in n for n in names), names
+    for sink in ("profile.json", "run_info.json",
+                 "profile/vocabularies/pz.json", "shapes/data_shapes.ttl",
+                 "shapes/metadata_shapes.ttl",
+                 "shapes/vocabulary_shapes_pz.ttl"):
+        assert (out / sink).exists(), sink
+
+
+def test_cmd_dqa_local_metadata_only(spark, tmp_path):
+    """test_cmd_dqa_metadata_only on a generated VoID file: no --triples,
+    metadata report rows and metadata shapes only."""
+    import csv
+
+    from main import cmd_dqa
+
+    cmd_dqa(_local_dqa_args(tmp_path, "md_out", with_graphs=False))
+    out = tmp_path / "md_out"
+    with open(out / "dq_assessment_local_pz.csv") as f:
+        names = {r["shape_name"] for r in csv.DictReader(f)}
+    assert any("Availability" in n or "Metadata" in n for n in names), names
+    assert not any("Entities" in n or "FunctionalProperty" in n
+                   for n in names), names
+    assert (out / "shapes" / "metadata_shapes.ttl").exists()
+    assert not (out / "shapes" / "data_shapes.ttl").exists()
+    assert not (out / "profile.json").exists()
+
+
 def test_cmd_curate_end_to_end(spark, tmp_path):
     """The spark-submit curate surface: gate -> source filter -> near-dup
     keep-best -> PII redaction, with monotone survivor counts and the

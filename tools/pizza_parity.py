@@ -17,26 +17,18 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-from pyspark.sql import functions as F
-
-from shacl_dqa_prototype_spark.functions.terms import OWL, RDF, RDFS, VOID
-from shacl_dqa_prototype_spark.plans.constraints import DQAConfig, VocabTerm
+from shacl_dqa_prototype_spark.functions.terms import OWL, RDF, RDFS
+from shacl_dqa_prototype_spark.plans.constraints import DQAConfig
 from shacl_dqa_prototype_spark.plans.dqa import (
     contextual_config_from_metadata,
     run_data_dqa,
     run_metadata_dqa,
+    run_vocab_dqa,
 )
-from shacl_dqa_prototype_spark.plans.profile import profile_graph
 from shacl_dqa_prototype_spark.plans.vocab import (
     mine_vocab,
     profile_to_vocab_terms,
-    subclass_closure,
-    tbox_merge_rows,
-    tbox_self_typing_rows,
-)
-from shacl_dqa_prototype_spark.plans.vocab_shapes import (
-    compile_vocab_constraints,
-    score_vocab_plan,
+    raw_usage_sets,
 )
 from shacl_dqa_prototype_spark.schemas import TRIPLES_SCHEMA
 from shacl_dqa_prototype_spark.session import get_spark
@@ -62,32 +54,10 @@ def build_report(spark):
 
     prof_v = mine_vocab(vocab_rows)
     terms, disjoint = profile_to_vocab_terms(prof_v)
-
     T_raw = spark.createDataFrame(data_rows, TRIPLES_SCHEMA)
-    # profile BEFORE merge (dq_assessment.py:128-143 profiles the raw graph)
-    profile = profile_graph(T_raw, CFG.type_property, CFG.labeling_property,
-                            CFG.description_property, CFG.interlinking_property)
-    merged = tbox_merge_rows(vocab_rows, prof_v.classes)
-    T = T_raw.unionByName(
-        spark.createDataFrame(merged, TRIPLES_SCHEMA)).dropDuplicates()
-
     metadata = spark.createDataFrame(void_rows, TRIPLES_SCHEMA)
     cfg = contextual_config_from_metadata(metadata, CFG)
-
-    # usage pruning sets come from the RAW graph (the reference's profile
-    # drives shape instantiation); sh:class closure from vocab subClassOf.
-    used_props = {r[1] for r in data_rows}
-    used_classes = {r[2] for r in data_rows if r[1] == RDF_TYPE}
-    sub_pairs = subclass_closure(vocab_rows)
-
-    from shacl_dqa_prototype_spark.plans.constraints import compile_data_constraints
-    from shacl_dqa_prototype_spark.plans.scoring import score_plan
-
-    plan = compile_data_constraints(
-        T, terms, disjoint, cfg, used_props=used_props,
-        used_classes=used_classes, subclass_pairs=sub_pairs)
-    plan.violations = plan.violations.cache()
-    report = score_plan(spark, plan, profile, target="data")
+    report = run_data_dqa(T_raw, terms, disjoint, cfg, vocab_rows=vocab_rows)
     md_report = run_metadata_dqa(spark, metadata)
     return report, md_report, (vocab_rows, prof_v, T_raw)
 
@@ -95,11 +65,7 @@ def build_report(spark):
 def vocab_report(spark, vocab_rows, prof_v, T_raw):
     """C37-C40 against the self-typed vocab graph, mirroring
     dq_assessment.py:171-229 (namespace routing + derived typing)."""
-    from shacl_dqa_prototype_spark.plans.dqa import run_vocab_dqa
-
-    used_classes = {r["o"] for r in T_raw.filter(F.col("p") == RDF_TYPE)
-                    .select("o").distinct().collect()}
-    used_props = {r["p"] for r in T_raw.select("p").distinct().collect()}
+    used_props, used_classes = raw_usage_sets(T_raw, RDF_TYPE)
     return run_vocab_dqa(spark, "pizza_owl", vocab_rows,
                          used_classes, used_props)
 
